@@ -234,7 +234,11 @@ object Main {
     if (o.trace) layer ++= CodecProbe.run(ctx, CodecProbe.Fixture.standard(spark))
     ctx.timing = false
     val warmEnd = System.nanoTime() + (WarmupSeconds * 1e9).toLong
-    do wl.step() while (System.nanoTime() < warmEnd)
+    var warmRounds = 0
+    do {
+      wl.step()
+      if (wl.roundComplete) warmRounds += 1
+    } while (System.nanoTime() < warmEnd || warmRounds < wl.warmRounds)
     wl.newRound()
     ctx.timing = true
     log("measuring")
@@ -326,6 +330,8 @@ trait Workload {
   def roundComplete: Boolean = true
   /** Start the next step on a fresh round of the mix. */
   def newRound(): Unit = ()
+  /** Complete rounds the warm-up runs at the least. */
+  def warmRounds: Int = 0
   /** Scale factor and tables of the inputs generated once per run. */
   def inputs: (Double, Seq[String]) = (0.0, Nil)
   def setup(rep: Int): Unit

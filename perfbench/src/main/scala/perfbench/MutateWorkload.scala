@@ -26,16 +26,20 @@ final class MutateWorkload(ctx: Ctx, rng: Random) extends Workload {
   private var nextId = 0
   private var notes: IndexedSeq[String] = IndexedSeq.empty
   private var rowWidth = 0.0
+  private var inserts = 0
 
   override def inputs: (Double, Seq[String]) = (Rows / 6e6, Seq("lineitem"))
 
   def setup(rep: Int): Unit = {
     val li = Inputs.lineitem(spark, ctx.data)
-      .selectExpr("concat(l_returnflag, l_linestatus)", "l_partkey", "l_shipdate").collect()
+      .selectExpr("l_partkey", "l_shipdate").collect()
+    // the partitions hold the same number of rows, so a statement costs
+    // about the same whichever partition it touches
     model = TreeMap.from(li.indices.map(i =>
-      (2 * i) -> Rec(li(i).getString(0), li(i).getInt(1), li(i).getString(2))))
+      (2 * i) -> Rec(Grps(i % Grps.length), li(i).getInt(0), li(i).getString(1))))
     nextId = 2 * li.length
-    notes = li.take(64).map(_.getString(2)).toIndexedSeq
+    inserts = 0
+    notes = li.take(64).map(_.getString(1)).toIndexedSeq
     rowWidth = 4 + 2 + 4 + notes.map(_.length).sum.toDouble / notes.length
     table = s"graft.mutate$rep.t"
     dir = ctx.work.resolve("warehouse").resolve(s"mutate$rep").resolve("t").toString
@@ -87,27 +91,38 @@ final class MutateWorkload(ctx: Ctx, rng: Random) extends Workload {
     }
 
   // Reads and inserts take ~50-100 ms; the copy-on-write statements and
-  // the change feed take several times that. A short round (six point
-  // reads, one other fast read, one insert, two slow operations; each
-  // slow or other fast card dealt from its own deck) keeps many rounds
-  // in a window, the median among the point reads and the tail among
-  // the slow operations.
-  private val deck = new Inputs.Deck(Seq("point" -> 6, "insert" -> 1, "fast" -> 1, "slow" -> 2), rng)
+  // the change feed take several times that. A short round (14 point
+  // reads, one other fast read, one insert, two slow operations) keeps
+  // many rounds in a window, the median well inside the point reads
+  // and the tail among the slow operations. The two slow operations of
+  // a round are one of two fixed pairs, the heaviest with the lightest,
+  // so rounds cost about the same whichever pair they draw.
+  private val deck = new Inputs.Deck(Seq("point" -> 14, "insert" -> 1, "fast" -> 1, "slow" -> 2), rng)
   private val fast = new Inputs.Deck(Seq("range" -> 1, "version_as_of" -> 1), rng)
-  private val slow = new Inputs.Deck(
-    Seq("update" -> 1, "delete" -> 1, "merge" -> 1, "change_feed" -> 1), rng)
+  private val slowPairs = new Inputs.Deck(Seq("merge delete" -> 1, "update change_feed" -> 1), rng)
+  private var slow: List[String] = Nil
   override def roundComplete: Boolean = deck.atStart
-  override def newRound(): Unit = Seq(deck, fast, slow).foreach(_.reset())
+  override def newRound(): Unit = {
+    Seq(deck, fast, slowPairs).foreach(_.reset())
+    slow = Nil
+  }
+  // every operation kind runs at least once before the window
+  override def warmRounds: Int = 3
 
   def step(): Unit = (deck.next() match {
     case "fast" => fast.next()
-    case "slow" => slow.next()
+    case "slow" =>
+      if (slow.isEmpty) slow = slowPairs.next().split(' ').toList
+      val c = slow.head
+      slow = slow.tail
+      c
     case card => card
   }) match {
     // every statement stays inside one partition, as small OLTP-style
     // statements do, so each commits once and costs about the same
     case "insert" =>
-      val rows = freshRows(20, Grps(rng.nextInt(Grps.length)))
+      inserts += 1
+      val rows = freshRows(20, Grps(inserts % Grps.length))
       mutation("insert", Nil, rows) {
         view("ins", rows)
         ctx.exec(s"INSERT INTO $table SELECT * FROM ins")
@@ -152,7 +167,8 @@ final class MutateWorkload(ctx: Ctx, rng: Random) extends Workload {
       read("range", s"SELECT count(*), sum(v) FROM $table WHERE id BETWEEN $a AND ${a + 500}",
         s"${rs.size}|${if (rs.isEmpty) "null" else rs.map(_.v.toLong).sum.toString}")
     case "version_as_of" =>
-      val c = commits(rng.nextInt(commits.length))
+      // the table as it was a fixed number of statements ago
+      val c = commits(math.max(0, commits.length - 1 - VersionLag))
       val m = c.state
       read("version_as_of",
         s"SELECT count(*), sum(id), sum(v), sum(length(note)) FROM $table VERSION AS OF ${c.version}",
@@ -160,7 +176,7 @@ final class MutateWorkload(ctx: Ctx, rng: Random) extends Workload {
           s"${m.valuesIterator.map(_.note.length.toLong).sum}")
     case "change_feed" =>
       // the changes of the last few statements
-      val from = math.max(0, commits.length - 2 - rng.nextInt(4))
+      val from = math.max(0, commits.length - 1 - FeedStatements)
       val window = commits.drop(from + 1)
       def agg(sign: String, rows: Seq[(Int, Rec)]): Option[String] =
         if (rows.isEmpty) None
@@ -197,6 +213,10 @@ final class MutateWorkload(ctx: Ctx, rng: Random) extends Workload {
 object MutateWorkload {
   /** Rows in the table at the start of the run. */
   val Rows = 15000
+  /** How many statements back a `VERSION AS OF` read goes. */
+  val VersionLag = 4
+  /** How many of the latest statements a change-feed read covers. */
+  val FeedStatements = 3
   final case class Rec(grp: String, v: Int, note: String)
   final case class Commit(version: Int, state: TreeMap[Int, Rec], removed: Seq[(Int, Rec)],
       added: Seq[(Int, Rec)])

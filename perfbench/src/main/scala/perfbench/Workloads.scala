@@ -260,8 +260,12 @@ final class IngestWorkload(ctx: Ctx, seed: Long, rng: Random) extends Workload {
   private var tables: Seq[(String, String)] = Nil
   private var src: DataFrame = _
   private val appended = mutable.Map.empty[String, (Long, Long, Long)]
-  private var commits = 0
-  private var steps = 0
+  // commits per table: every table is compacted after the same number
+  // of its own commits, whatever the order of the operations
+  private val commits = mutable.Map.empty[String, Int]
+  // per operation kind, how many ran: each kind alternates between the
+  // two tables on its own, so both get the same share of every kind
+  private val turns = mutable.Map.empty[String, Int]
   private var userBytes = 0L
 
   override def inputs: (Double, Seq[String]) = (Sf, Seq("lineitem"))
@@ -292,8 +296,9 @@ final class IngestWorkload(ctx: Ctx, seed: Long, rng: Random) extends Workload {
       }
     appended.clear()
     tables.foreach { case (t, _) => appended(t) = (0L, 0L, 0L) }
-    commits = 0
-    steps = 0
+    commits.clear()
+    tables.foreach { case (t, _) => commits(t) = 0 }
+    turns.clear()
     userBytes = 0L
   }
 
@@ -302,15 +307,22 @@ final class IngestWorkload(ctx: Ctx, seed: Long, rng: Random) extends Workload {
     if (n == 0) "0|null|null" else s"$n|$x|$s"
   }
 
-  // small appends are the majority, so the median falls among them
-  private val deck = new Inputs.Deck(Seq("small" -> 7, "large" -> 2, "readback" -> 1), rng)
+  // small appends are about seven in ten operations, so the median falls
+  // well inside them rather than at their upper edge
+  private val deck = new Inputs.Deck(Seq("small" -> 10, "large" -> 2, "readback" -> 1), rng)
   override def roundComplete: Boolean = deck.atStart
   override def newRound(): Unit = deck.reset()
+  // the write path is still warming up for several seconds
+  override def warmRounds: Int = 3
 
   def step(): Unit = {
-    steps += 1
-    val (t, dir) = tables(steps % tables.length)
-    val card = if (commits > 0 && commits % OptimizeEvery == 0) "optimize" else deck.next()
+    val due = tables.find { case (t, _) => commits(t) > 0 && commits(t) % OptimizeEvery == 0 }
+    val card = if (due.isDefined) "optimize" else deck.next()
+    val (t, dir) = due.getOrElse {
+      val n = turns.getOrElse(card, 0)
+      turns(card) = n + 1
+      tables(n % tables.length)
+    }
     if (card == "readback") {
       val exp = expectedOf(t)
       ctx.op("readback", "read", (appended(t)._1 * rowWidth).toLong) {
@@ -318,10 +330,10 @@ final class IngestWorkload(ctx: Ctx, seed: Long, rng: Random) extends Workload {
         Some(Result(Ctx.canon(ctx.collect(Inputs.checksumSql(Inputs.LineitemCols, t))), () => exp))
       }
     } else if (card == "optimize") {
-      commits += 1
+      commits(t) += 1
       ctx.op("optimize", "commit", 0L, Seq(dir)) { ctx.exec(s"OPTIMIZE $t"); None }
     } else {
-      commits += 1
+      commits(t) += 1
       val large = card == "large"
       val n = if (large) LargeBuckets else SmallBuckets
       val b0 = rng.nextInt(Buckets - n + 1)
